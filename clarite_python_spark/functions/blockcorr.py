@@ -45,6 +45,7 @@ at a row sample first.
 from __future__ import annotations
 
 import math
+from collections import Counter
 from typing import Iterator
 
 import numpy as np
@@ -194,6 +195,9 @@ def block_correlations(
     """
     from concurrent.futures import ThreadPoolExecutor
 
+    dup = sorted(c for c, n in Counter(cols).items() if n > 1)
+    if dup:
+        raise ValueError(f"duplicate column names in cols: {dup}")
     p = len(cols)
     n_blocks = (p + block_size - 1) // block_size
     payload_bytes = _STATS * block_size * block_size * 8

@@ -4,34 +4,61 @@
 ``association_study`` fits one GLM per (outcome x regression-variable)
 pair over a single wide table. The reference iterates variables in one
 process (its multiprocessing pool is force-disabled,
-``glm_regression.py:400-401``); here the designed per-variable
-independence becomes the distributed axis:
+``glm_regression.py:400-401``); here the per-variable independence is
+the distributed axis, and each outcome runs in two parts:
 
-    wide df --unpivot(RV cols)--> long (ID, outcome, covars..., variable, value)
-        --groupBy("variable").applyInPandas(numpy GLM kernel)--> result rows
-        --orderBy(pvalue)
+- **plan** (``_plan_association``, pure Python): route every variable
+  to the first engine of the chain that takes it, with the reason.
+  Constant/unknown variables are skipped; variables a per-variable
+  weight map leaves out get an all-NaN row.
+
+  =============  ==========================================================
+  wolsagg        survey Gaussian, continuous: per-PSU weighted Grams
+  wbinomagg      survey binomial, discrete domain (incl. encoded genotypes):
+                 weighted contingency cells
+  wbinomirls     survey binomial, continuous: IRLS batched over variables
+  olsagg         Gaussian: one masked-Gram pass for every variable type
+  binomagg       binomial, discrete covariates: contingency cells
+  columnar       ``strategy="columnar"``: one ML-GLM job per variable
+  kernel         everything else: unpivot -> ``groupBy(variable)
+                 .applyInPandas`` numpy GLM kernel
+  =============  ==========================================================
+
+  The survey engines need discrete covariates for binomial outcomes and
+  at most ``MAX_DESIGN_UNITS`` PSUs (strata in a design without
+  clusters); the jackknife IRLS also keeps to ``JK_IRLS_MAX_UNITS``
+  replicate units. ``use_sufficient_stats=False`` or a custom
+  ``regression_kind`` (without a survey design) sends everything to the
+  kernel.
+- **execute** (``_run_plan``): run the steps in order. An engine can
+  hand variables back at run time — olsagg when a variable's
+  complete-case levels differ from the catalog's, binomagg past its HLL
+  domain gate, wbinomagg past its cell budget — and they are re-planned
+  onto the engines below it (so a continuous wbinomagg fallback goes to
+  wbinomirls, the rest to the kernel). wolsagg never hands back, so its
+  jobs run from driver threads together with the kernel tail, which is
+  then checkpointed on the executors. Result frames are unioned in
+  step order and sorted by pvalue.
 
 The unpivot is a Catalyst ``Expand`` (one scan); the only shuffle keys on
 ``variable``, so each reducer handles ~|rows| values — the correct layout
-up to ~10^7 rows/group. Beyond that (100-TB regime) a columnar strategy —
-one Spark ML ``GeneralizedLinearRegression`` job per variable scheduled
-from a driver thread pool over column-sliced DataFrames — keeps the same
-result schema; the melt path is the default because EWAS tables are wide
-(10^3 columns) and short-ish per group.
-
-Kernel inputs that are identical across groups (covariate types/levels,
-family, min_n) ride along as a tiny closure-captured dict (broadcast by
-task serialization, ≈KBs).
+up to ~10^7 rows/group, past which the columnar strategy keeps the same
+result schema. Kernel inputs that are identical across groups (covariate
+types/levels, family, min_n) ride along as a tiny closure-captured dict
+(broadcast by task serialization, ≈KBs).
 """
 
 from __future__ import annotations
 
 import warnings
+from concurrent import futures
+from functools import partial
 from itertools import combinations
-from typing import Mapping, Sequence
+from typing import Callable, Collection, Mapping, NamedTuple, Sequence
 
 import numpy as np
 import pandas as pd
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -41,11 +68,13 @@ from clarite_python_spark.catalog import (
     CATEGORICAL,
     CONSTANT,
     CONTINUOUS,
+    GENOTYPES,
     ID_COL,
     UNKNOWN,
     ClariteFrame,
     qcol,
 )
+from clarite_python_spark.functions import binomagg, olsagg, wbinomagg, wbinomirls, wolsagg
 from clarite_python_spark.functions.distributions import chi2_sf, t_sf
 from clarite_python_spark.functions.glm import (
     BINOMIAL,
@@ -59,6 +88,14 @@ from clarite_python_spark.functions.wglm import (
     regterm_pvalue,
     sandwich_vcov,
     survey_dof,
+)
+from clarite_python_spark.operators.analyze_columnar import columnar_association_study
+from clarite_python_spark.survey.design import (
+    CLUST_COL,
+    STRAT_COL,
+    SUBSET_COL,
+    SurveyDesignSpec,
+    _weight_col,
 )
 
 __all__ = [
@@ -122,15 +159,43 @@ def _default_row(rv: str, outcome: str) -> dict:
     }
 
 
-def _encode_binary_outcome(levels: list) -> dict:
-    """Sorted levels -> {level: 0/1}; 'Case'/'Control' special-cased so
+def _encode_outcome(data: ClariteFrame, df: DataFrame, outcome: str) -> tuple[DataFrame, str]:
+    """``df`` with ``outcome`` as a double column, and the GLM family its
+    type implies: continuous -> Gaussian; binary -> binomial, sorted
+    levels mapped to 0/1 with 'Case'/'Control' special-cased so
     Control=0, Case=1 (reference glm_regression.py:135-150, GH #115)."""
-    cats = sorted(levels)
+    outcome_type = data.catalog.get(outcome)
+    if outcome_type == CONTINUOUS:
+        return df.withColumn(outcome, F.col(outcome).cast("double")), GAUSSIAN
+    if outcome_type != BINARY:
+        raise ValueError(f"outcome {outcome!r} must be continuous or binary, not {outcome_type}")
+    cats = sorted(data.category_levels(outcome))
     if len(cats) != 2:
         raise ValueError(f"binary outcome must have 2 levels, got {cats}")
-    if cats[0] == "Case" and cats[1] == "Control":
+    if cats == ["Case", "Control"]:
         cats = ["Control", "Case"]
-    return {cats[0]: 0.0, cats[1]: 1.0}
+    expr = F.when(F.col(outcome).isNull(), F.lit(None).cast("double"))
+    for k, v in zip(cats, (0.0, 1.0)):
+        expr = expr.when(F.col(outcome).cast("string") == F.lit(str(k)), F.lit(v))
+    return df.withColumn(outcome, expr), BINOMIAL
+
+
+def _run_concurrently(
+    data: ClariteFrame, jobs: Sequence[Callable], level_columns: Sequence[str] = ()
+) -> list:
+    """Run independent Spark jobs from up to four driver threads so they
+    overlap on the cluster; results come back in job order. The level
+    cache is a plain dict that jobs fill lazily, so the levels of
+    ``level_columns`` -- every column the jobs read levels of -- are
+    fetched first, in one scan, before any job starts."""
+    if not jobs:
+        return []
+    data.prefetch_category_levels(level_columns)
+    if len(jobs) == 1:
+        return [jobs[0]()]
+    with futures.ThreadPoolExecutor(max_workers=min(4, len(jobs))) as pool:
+        submitted = [pool.submit(job) for job in jobs]
+        return [f.result() for f in submitted]
 
 
 def _design_matrix(
@@ -278,7 +343,6 @@ def _encode_genotype_variables(
     column replaces the genotype in place and its CLARITE type becomes
     the encoded type (continuous, or categorical for codominant). Pure
     column expressions — the plan gains one projection, no UDF."""
-    from clarite_python_spark.catalog import GENOTYPES
     from clarite_python_spark.functions.genotypes import (
         KNOWN_ENCODINGS,
         _sql_name,
@@ -399,13 +463,6 @@ def _make_weighted_kernel(
     ``"jackknife"`` = delete-1-cluster replicates (implemented but unused
     in the reference, survey_model.py:174-208).
     """
-    from clarite_python_spark.survey.design import (
-        CLUST_COL,
-        STRAT_COL,
-        SUBSET_COL,
-        _weight_col,
-    )
-
     has_strata = constants["has_strata"]
     has_cluster = constants["has_cluster"]
 
@@ -593,6 +650,361 @@ def _zscore_columns(df: DataFrame, cols: list[str]) -> DataFrame:
     )
 
 
+# Engines association_study routes a regression variable to, in routing
+# order: the first engine that takes a variable fits it. All but KERNEL
+# read sufficient statistics or run distributed fits; KERNEL is the
+# grouped applyInPandas row kernel every other engine falls back to.
+WOLSAGG = "wolsagg"
+WBINOMAGG = "wbinomagg"
+WBINOMIRLS = "wbinomirls"
+OLSAGG = "olsagg"
+BINOMAGG = "binomagg"
+COLUMNAR = "columnar"
+KERNEL = "kernel"
+ENGINES = (WOLSAGG, WBINOMAGG, WBINOMIRLS, OLSAGG, BINOMAGG, COLUMNAR, KERNEL)
+_WEIGHTED = (WOLSAGG, WBINOMAGG, WBINOMIRLS)
+# Engines whose jobs run from driver threads together with the kernel
+# tail rather than before it. Only an engine that never hands a variable
+# back qualifies: the tail's variables must be final when it starts.
+_OVERLAP_TAIL = (WOLSAGG,)
+
+# The survey fast paths assemble the sandwich on the driver, one block
+# per PSU (per stratum in a design without clusters); larger designs go
+# to the row kernel.
+MAX_DESIGN_UNITS = 16384
+
+
+class _Design(NamedTuple):
+    """The survey-design facts routing reads."""
+
+    has_cluster: bool
+    n_units: int  # PSUs; strata when the design has no cluster
+    vcov_method: str
+    weights: str | Mapping[str, str] | None  # one name, per variable, or none
+
+
+class _Step(NamedTuple):
+    engine: str
+    variables: list[str]
+    reason: str
+    by_weight: dict  # weight name (None: unweighted) -> its variables
+
+
+class _Plan(NamedTuple):
+    steps: list[_Step]
+    skipped: list[str]  # constant/unknown: no result row
+    no_weight: list[str]  # weighted engine, no weight mapped: all-NaN row
+
+
+def _group_by_weight(
+    variables: Sequence[str], weights: str | Mapping[str, str] | None
+) -> tuple[dict, list[str]]:
+    """Variables per weight column, and those a per-variable weight map
+    leaves out."""
+    per_variable = isinstance(weights, Mapping)
+    groups: dict = {}
+    missing: list[str] = []
+    for v in variables:
+        wn = weights.get(v) if per_variable else weights
+        if per_variable and wn is None:
+            missing.append(v)
+        else:
+            groups.setdefault(wn, []).append(v)
+    return groups, missing
+
+
+def _plan_association(
+    family: str,
+    rv_types: Mapping[str, str],
+    genotype_cols: Collection[str],
+    covar_types: Mapping[str, str],
+    design: _Design | None,
+    use_sufficient_stats: bool,
+    strategy: str,
+    custom_kernel: bool,
+    after: str | None = None,
+) -> _Plan:
+    """Route each regression variable, in ``rv_types`` order, to the
+    first engine that takes it. Pure Python: every input is on the
+    driver already. ``after`` starts the chain below that engine, for the
+    variables it handed back at run time. A survey design wins over a
+    custom kernel."""
+    skipped = [v for v, t in rv_types.items() if t in (CONSTANT, UNKNOWN)]
+    todo = [v for v, t in rv_types.items() if t not in (CONSTANT, UNKNOWN)]
+    if strategy == "columnar":
+        steps = [_Step(COLUMNAR, todo, "strategy='columnar'", {None: todo})]
+        return _Plan(steps if todo else [], skipped, [])
+    if strategy != "grouped":
+        raise ValueError(f"unknown strategy {strategy!r}")
+
+    def continuous(v):
+        return rv_types[v] == CONTINUOUS
+
+    discrete_covariates = all(t in (BINARY, CATEGORICAL) for t in covar_types.values())
+    takes: dict = {}  # engine -> (accepts a variable, reason)
+    tail = "no sufficient-statistics engine for the variable type"
+    if not use_sufficient_stats:
+        tail = "use_sufficient_stats=False"
+    elif design is not None:
+        if design.n_units > MAX_DESIGN_UNITS:
+            units = "PSUs" if design.has_cluster else "strata"
+            tail = f"{design.n_units:,} {units} > {MAX_DESIGN_UNITS:,}"
+        elif family == GAUSSIAN:
+            takes[WOLSAGG] = (continuous, "weighted OLS from per-unit Grams")
+        elif not discrete_covariates:
+            tail = "weighted binomial with a continuous covariate"
+        else:
+            takes[WBINOMAGG] = (
+                lambda v: not continuous(v) or v in genotype_cols,
+                "discrete domain: weighted contingency cells",
+            )
+            takes[WBINOMIRLS] = (continuous, "weighted IRLS batched over variables")
+    elif custom_kernel:
+        tail = "custom regression_kind"
+    elif family == GAUSSIAN:
+        takes[OLSAGG] = (lambda v: True, "OLS from one masked-Gram pass")
+    elif discrete_covariates:
+        takes[BINOMAGG] = (lambda v: True, "binomial contingency cells")
+    else:
+        tail = "binomial with a continuous covariate"
+    if after is not None:
+        for engine in ENGINES[: ENGINES.index(after) + 1]:
+            takes.pop(engine, None)
+        tail = f"handed back by {after}"
+
+    def route() -> dict:
+        routed: dict = {e: [] for e in ENGINES}
+        for v in todo:
+            routed[next((e for e, (ok, _) in takes.items() if ok(v)), KERNEL)].append(v)
+        return routed
+
+    routed = route()
+    n_irls = len(routed[WBINOMIRLS])
+    if n_irls and design.vcov_method == "jackknife":
+        # each (variable, PSU) replicate is one more IRLS unit per scan;
+        # past the budget the kernel's one-scan replicates are cheaper
+        if n_irls * design.n_units > JK_IRLS_MAX_UNITS:
+            del takes[WBINOMIRLS]
+            tail = (
+                f"jackknife IRLS: {n_irls} variables x {design.n_units} PSUs"
+                f" > {JK_IRLS_MAX_UNITS}"
+            )
+            routed = route()
+
+    steps: list[_Step] = []
+    no_weight: list[str] = []
+    for engine in ENGINES:
+        variables = routed[engine]
+        if not variables:
+            continue
+        if engine in _WEIGHTED:
+            groups, missing = _group_by_weight(variables, design.weights)
+            no_weight += missing
+        else:
+            groups = {None: variables}
+        reason = takes[engine][1] if engine in takes else tail
+        steps.append(_Step(engine, variables, reason, groups))
+    return _Plan(steps, skipped, no_weight)
+
+
+class _Fit(NamedTuple):
+    """One outcome's inputs, shared by every engine call."""
+
+    data: ClariteFrame
+    df: DataFrame  # outcome encoded; design columns joined
+    outcome: str
+    family: str
+    rv_types: dict[str, str]
+    covariates: list[str]
+    covar_types: dict[str, str]
+    genotype_cols: set[str]
+    min_n: int
+    report_categorical_betas: bool
+    kernel: Callable  # the grouped applyInPandas kernel
+    id_vars: list[str]  # columns the kernel's long table carries
+    spec: SurveyDesignSpec | None
+    vcov_method: str
+    max_concurrent_jobs: int
+
+
+def _level_columns(fit: _Fit, engine: str, variables: Sequence[str]) -> list[str]:
+    """Columns whose levels ``engine`` reads from the level cache."""
+    if engine not in (WOLSAGG, WBINOMIRLS, OLSAGG):
+        return []
+    cols = [c for c in fit.covariates if fit.covar_types[c] in (BINARY, CATEGORICAL)]
+    if engine == OLSAGG:
+        cols += [v for v in variables if fit.rv_types[v] != CONTINUOUS]
+    return cols
+
+
+def _engine_rows(
+    fit: _Fit, engine: str, rvs: list[str], wn: str | None
+) -> tuple[list[dict], list[str]]:
+    """One engine call over ``rvs`` (one weight group): result rows and
+    the variables the engine hands back to the chain."""
+    default_row = partial(_default_row, outcome=fit.outcome)
+    levels_of = fit.data.category_levels
+    if engine == OLSAGG:
+        return olsagg.gaussian_assoc_rows(
+            fit.df,
+            fit.outcome,
+            [v for v in rvs if fit.rv_types[v] == CONTINUOUS],
+            [v for v in rvs if fit.rv_types[v] != CONTINUOUS],
+            fit.rv_types,
+            fit.covariates,
+            fit.covar_types,
+            levels_of,
+            fit.min_n,
+            fit.report_categorical_betas,
+            default_row,
+        )
+    if engine == BINOMAGG:
+        return binomagg.binomial_contingency_rows(
+            fit.df,
+            fit.outcome,
+            rvs,
+            fit.rv_types,
+            fit.covariates,
+            fit.covar_types,
+            fit.min_n,
+            fit.report_categorical_betas,
+            default_row,
+            known_small=fit.genotype_cols,
+        )
+    spec = fit.spec
+    weight = (
+        dict(spec.constants(), drop_unweighted=spec.drop_unweighted),
+        _weight_col(wn) if wn is not None else None,
+        spec.weight_means()[wn] if wn is not None else 1.0,
+        wn,
+    )
+    if engine == WBINOMAGG:
+        return wbinomagg.weighted_binomial_cells_rows(
+            fit.df,
+            fit.outcome,
+            rvs,
+            fit.rv_types,
+            fit.covariates,
+            fit.covar_types,
+            fit.min_n,
+            fit.report_categorical_betas,
+            default_row,
+            *weight,
+            CLUST_COL,
+            SUBSET_COL,
+            strat_col=STRAT_COL,
+            vcov_method=fit.vcov_method,
+        )
+    args = (
+        fit.df,
+        fit.outcome,
+        rvs,
+        fit.covariates,
+        fit.covar_types,
+        levels_of,
+        fit.min_n,
+        default_row,
+        *weight,
+        STRAT_COL,
+    )
+    if engine == WBINOMIRLS:
+        return wbinomirls.weighted_binomial_irls_rows(
+            *args, CLUST_COL, SUBSET_COL, vcov_method=fit.vcov_method
+        ), []
+    if spec.has_cluster:
+        return wolsagg.weighted_gaussian_suffstats_rows(
+            *args, CLUST_COL, SUBSET_COL, vcov_method=fit.vcov_method
+        ), []
+    return wolsagg.weighted_gaussian_nocluster_rows(*args, SUBSET_COL), []
+
+
+def _kernel_frame(fit: _Fit, variables: list[str]) -> DataFrame:
+    """The grouped row-kernel fan-out. ONE unpivot covers every variable
+    type: values ride as strings (int->"1", double keeps its repr) and
+    the kernels recover numerics with pd.to_numeric -- one scan instead
+    of one per type group."""
+    long = fit.df.select(
+        *fit.id_vars, *[qcol(c).cast("string").alias(c) for c in variables]
+    ).unpivot(fit.id_vars, variables, "variable", "value")
+    return long.groupBy("variable").applyInPandas(fit.kernel, RESULT_SCHEMA)
+
+
+def _run_plan(fit: _Fit, plan: _Plan, replan: Callable[..., _Plan]) -> list[DataFrame]:
+    """Run the plan's steps in order; return their result frames in step
+    order. Variables an engine hands back join the chain below it
+    (``replan``). The jobs of _OVERLAP_TAIL engines run from driver
+    threads together with the kernel tail, whose result is then
+    checkpointed on the executors rather than collected."""
+    spark = fit.df.sparkSession
+    pending = list(fit.rv_types)
+    frames: list = []  # per step: its rows, or its DataFrame
+    overlap: list = []  # (rows to extend, jobs)
+    overlap_levels: list[str] = []
+    steps = list(plan.steps)
+    while steps:
+        step = steps.pop(0)
+        taken = set(step.variables)
+        pending = [v for v in pending if v not in taken]
+        if step.engine == KERNEL:
+            frames.append(_kernel_frame(fit, step.variables))
+            continue
+        if step.engine == COLUMNAR:
+            pdf = columnar_association_study(
+                fit.df,
+                fit.outcome,
+                step.variables,
+                fit.rv_types,
+                fit.covariates,
+                fit.covar_types,
+                fit.family,
+                fit.min_n,
+                fit.max_concurrent_jobs,
+            )
+            frames.append(spark.createDataFrame(pdf, RESULT_SCHEMA))
+            continue
+        no_weight = set(plan.no_weight)
+        rows = [_default_row(v, fit.outcome) for v in step.variables if v in no_weight]
+        jobs = [
+            partial(_engine_rows, fit, step.engine, rvs, wn)
+            for wn, rvs in step.by_weight.items()
+        ]
+        frames.append(rows)
+        levels = _level_columns(fit, step.engine, step.variables)
+        if step.engine in _OVERLAP_TAIL:
+            overlap.append((rows, jobs))
+            overlap_levels += levels
+            continue
+        fit.data.prefetch_category_levels(levels)
+        handed_back: list[str] = []
+        for job in jobs:
+            got, back = job()
+            rows.extend(got)
+            handed_back.extend(back)
+        if handed_back:
+            pending += handed_back
+            plan = replan({v: fit.rv_types[v] for v in pending}, after=step.engine)
+            steps = list(plan.steps)
+    if overlap:
+        jobs = [job for _, js in overlap for job in js]
+        # the kernel step, when there is one, is the last
+        tail = frames[-1] if isinstance(frames[-1], DataFrame) else None
+        if tail is not None:
+            jobs.append(
+                partial(tail.localCheckpoint, eager=True, storageLevel=StorageLevel.DISK_ONLY)
+            )
+        done = iter(_run_concurrently(fit.data, jobs, overlap_levels))
+        for rows, js in overlap:
+            for _ in js:
+                rows.extend(next(done)[0])
+        if tail is not None:
+            frames[-1] = next(done)
+    return [
+        spark.createDataFrame(f, RESULT_SCHEMA) if isinstance(f, list) else f
+        for f in frames
+        if not isinstance(f, list) or f
+    ]
+
+
 def association_study(
     data: ClariteFrame,
     outcomes: str | Sequence[str],
@@ -635,6 +1047,8 @@ def association_study(
     100-TB path where a variable's rows exceed one worker's memory
     (SURVEY.md §7 risk #4). Same result schema; unweighted studies only.
     """
+    if strategy == "columnar" and survey_design_spec is not None:
+        raise ValueError("strategy='columnar' does not support survey designs (use grouped)")
     custom_kernel_factory = None
     if callable(regression_kind):
         # user extension point (reference association_study.py:90-96
@@ -657,12 +1071,10 @@ def association_study(
     if isinstance(outcomes, str):
         outcomes = [outcomes]
     covariates = list(covariates or [])
-    all_vars = data.variables
     if regression_variables is None:
-        regression_variables = [c for c in all_vars if c not in set(outcomes) | set(covariates)]
+        exclude = set(outcomes) | set(covariates)
+        regression_variables = [c for c in data.variables if c not in exclude]
     rvs = list(regression_variables)
-
-    from clarite_python_spark.catalog import GENOTYPES
 
     genotype_cols = {
         c for c in [*rvs, *covariates] if data.catalog.get(c) == GENOTYPES
@@ -674,537 +1086,95 @@ def association_study(
     for v in [*outcomes, *covariates, *rvs]:
         if v not in cat.types:
             raise ValueError(f"unknown variable {v!r}")
-    skipped = [v for v in rvs if cat.get(v) in (CONSTANT, UNKNOWN)]
-    if skipped:
-        warnings.warn(f"skipping {len(skipped)} constant/unknown regression variables")
-        rvs = [v for v in rvs if v not in set(skipped)]
-
     covar_types = {c: cat.get(c) for c in covariates}
+
+    spec = survey_design_spec
+    design = None
+    if spec is not None:
+        err = spec.validate(data)
+        if err is not None:
+            raise ValueError(err)
+        # the two cached full-design collects are independent jobs
+        _run_concurrently(data, [spec.constants, spec.weight_means])
+        consts = spec.constants()
+        design = _Design(
+            spec.has_cluster,
+            len(consts["clusters"] if spec.has_cluster else consts["rows_per_strat"]),
+            vcov_method,
+            spec.weight_name if spec.single_weight else spec.weight_names,
+        )
+
     results: list[DataFrame] = []
     for outcome in outcomes:
-        outcome_type = cat.get(outcome)
-        my_rvs = [v for v in rvs if v != outcome]
-        rv_types = {v: cat.get(v) for v in my_rvs}
-        df = _ensure_parallelism(data.df)
-        # survey-Gaussian suffstats passes deferred for thread-pool
-        # overlap with the grouped tail (set by that branch below)
-        deferred_gauss_jobs: list = []
-        deferred_gauss_rows: list[dict] = []
-        deferred_gauss_slot: int | None = None
-        if outcome_type == CONTINUOUS:
-            family = GAUSSIAN
-            df = df.withColumn(outcome, F.col(outcome).cast("double"))
-        elif outcome_type == BINARY:
-            family = BINOMIAL
-            mapping = _encode_binary_outcome(data.category_levels(outcome))
-            expr = F.when(F.col(outcome).isNull(), F.lit(None).cast("double"))
-            for k, v in mapping.items():
-                expr = expr.when(F.col(outcome).cast("string") == F.lit(str(k)), F.lit(v))
-            df = df.withColumn(outcome, expr)
-        elif outcome_type == CATEGORICAL:
+        if cat.get(outcome) == CATEGORICAL:
             raise NotImplementedError(
                 "Categorical Outcomes are not yet supported for this type of regression."
             )
-        else:
-            raise ValueError(f"outcome {outcome!r} type could not be determined")
+        df, family = _encode_outcome(data, _ensure_parallelism(data.df), outcome)
+        replan = partial(
+            _plan_association,
+            family,
+            genotype_cols=genotype_cols,
+            covar_types=covar_types,
+            design=design,
+            use_sufficient_stats=use_sufficient_stats,
+            strategy=strategy,
+            custom_kernel=custom_kernel_factory is not None,
+        )
+        plan = replan({v: cat.get(v) for v in rvs if v != outcome})
+        if plan.skipped:
+            warnings.warn(
+                f"skipping {len(plan.skipped)} constant/unknown regression variables"
+            )
+        skipped = set(plan.skipped)
+        rv_types = {v: cat.get(v) for v in rvs if v != outcome and v not in skipped}
 
         if standardize_data:
-            z_cols = [v for v in my_rvs if rv_types[v] == CONTINUOUS]
+            z_cols = [v for v, t in rv_types.items() if t == CONTINUOUS]
             z_cols += [c for c in covariates if covar_types[c] == CONTINUOUS]
-            if outcome_type == CONTINUOUS:
+            if family == GAUSSIAN:
                 z_cols.append(outcome)
             df = _zscore_columns(df, z_cols)
 
-        if strategy == "columnar":
-            if survey_design_spec is not None:
-                raise ValueError(
-                    "strategy='columnar' does not support survey designs (use grouped)"
-                )
-            from clarite_python_spark.operators.analyze_columnar import (
-                columnar_association_study,
-            )
-
-            pdf = columnar_association_study(
-                df,
-                outcome,
-                my_rvs,
-                rv_types,
-                covariates,
-                covar_types,
-                family,
-                min_n,
-                max_concurrent_jobs,
-            )
-            results.append(data.df.sparkSession.createDataFrame(pdf, RESULT_SCHEMA))
-            continue
-        if strategy != "grouped":
-            raise ValueError(f"unknown strategy {strategy!r}")
-
         id_vars = [ID_COL, outcome, *covariates]
-        if survey_design_spec is not None:
-            err = survey_design_spec.validate(data)
-            if err is not None:
-                raise ValueError(err)
-            # warm the two cached full-design collects CONCURRENTLY
-            # (guide §2.6): constants() (one groupBy-cluster agg) and
-            # weight_means() (one global agg) are independent jobs that
-            # otherwise run back-to-back; every later call hits the
-            # spec's cache.
-            from concurrent.futures import ThreadPoolExecutor as _TPE
-
-            with _TPE(max_workers=2) as _pool:
-                _cf = _pool.submit(survey_design_spec.constants)
-                _wf = _pool.submit(survey_design_spec.weight_means)
-                _cf.result()
-                _wf.result()
-            df = df.join(survey_design_spec.df, on=ID_COL, how="left")
-            id_vars = id_vars + survey_design_spec.design_columns()
+        kernel_args = (
+            outcome, covariates, covar_types, rv_types, family, min_n, report_categorical_betas
+        )
+        if spec is not None:
+            df = df.join(spec.df, on=ID_COL, how="left")
+            id_vars += spec.design_columns()
             weight_info = {
-                "single_weight": survey_design_spec.single_weight,
-                "weight_name": survey_design_spec.weight_name,
-                "weight_names": survey_design_spec.weight_names,
-                "weight_means": survey_design_spec.weight_means(),
-                "drop_unweighted": survey_design_spec.drop_unweighted,
+                "single_weight": spec.single_weight,
+                "weight_name": spec.weight_name,
+                "weight_names": spec.weight_names,
+                "weight_means": spec.weight_means(),
+                "drop_unweighted": spec.drop_unweighted,
             }
             kernel = _make_weighted_kernel(
-                outcome,
-                covariates,
-                covar_types,
-                rv_types,
-                family,
-                min_n,
-                report_categorical_betas,
-                survey_design_spec.constants(),
-                weight_info,
-                vcov_method=vcov_method,
+                *kernel_args, spec.constants(), weight_info, vcov_method=vcov_method
             )
         elif custom_kernel_factory is not None:
-            kernel = custom_kernel_factory(
-                outcome, covariates, covar_types, rv_types, family, min_n, report_categorical_betas
-            )
+            kernel = custom_kernel_factory(*kernel_args)
         else:
-            kernel = _make_assoc_kernel(
-                outcome, covariates, covar_types, rv_types, family, min_n, report_categorical_betas
-            )
-        # ONE unpivot covering every variable type: values ride as strings
-        # (int->"1", double keeps its repr) and the kernels recover
-        # numerics with pd.to_numeric — one scan instead of one per type
-        # group, which matters when the table is the expensive input.
-        group = [v for v in my_rvs if rv_types[v] in (CONTINUOUS, BINARY, CATEGORICAL)]
-        if (
-            use_sufficient_stats
-            and survey_design_spec is not None
-            and family == GAUSSIAN
-            and (
-                vcov_method == "stata"
-                # jackknife replicates are closed-form on per-cluster
-                # Grams (wolsagg) — cluster designs only
-                or (vcov_method == "jackknife" and survey_design_spec.has_cluster)
-            )
-            and (
-                (
-                    survey_design_spec.has_cluster
-                    and len(survey_design_spec.constants()["clusters"]) <= 16384
-                )
-                or (
-                    not survey_design_spec.has_cluster
-                    and len(survey_design_spec.constants()["rows_per_strat"]) <= 16384
-                )
-            )
-        ):
-            # survey-weighted Gaussian fits for CONTINUOUS variables are
-            # closed-form: per-(variable, cluster) weighted sufficient
-            # statistics feed both the fit and the linearized sandwich
-            # (functions/wolsagg.py) — one mapInPandas scan instead of
-            # melting data rows through per-variable Python groups. The
-            # accumulator is a sort + segment-sum, O(batch x p) per stat
-            # and independent of #clusters; the gate only bounds the
-            # DRIVER-side (#clusters x zdim^2) sandwich assembly (16k
-            # PSUs x a dozen params ~ MBs; a million-cluster design
-            # falls back to the grouped kernel).
-            # No-cluster designs (strata-only / weights-only) need
-            # per-observation score outer products for the sandwich — a
-            # SECOND scan computes per-stratum sums of w^2 e^2 z z'
-            # against the pass-1 fit (weighted_gaussian_nocluster_rows).
-            from clarite_python_spark.functions.wolsagg import (
-                weighted_gaussian_nocluster_rows,
-                weighted_gaussian_suffstats_rows,
-            )
-            from clarite_python_spark.survey.design import (
-                CLUST_COL,
-                STRAT_COL,
-                SUBSET_COL,
-                _weight_col,
-            )
-
-            wsuff = [v for v in group if rv_types[v] == CONTINUOUS]
-            group = [v for v in group if rv_types[v] != CONTINUOUS]
-            by_weight: dict = {}
-            no_weight_rows: list[dict] = []
-            for v in wsuff:
-                if weight_info["single_weight"]:
-                    by_weight.setdefault(weight_info["weight_name"], []).append(v)
-                elif weight_info["weight_names"] is not None:
-                    wn = weight_info["weight_names"].get(v)
-                    if wn is None:
-                        # reference: "No weight found ..." -> all-NaN row
-                        no_weight_rows.append(_default_row(v, outcome))
-                    else:
-                        by_weight.setdefault(wn, []).append(v)
-                else:
-                    by_weight.setdefault(None, []).append(v)
-            w_consts = dict(
-                survey_design_spec.constants(),
-                drop_unweighted=weight_info["drop_unweighted"],
-            )
-
-            # DEFER the per-weight-group suffstats collects instead of
-            # running them inline: each is an independent Spark job, and
-            # the grouped-kernel tail below is another — submitting them
-            # together from a driver thread pool lets the categorical
-            # variables' melt/fit job overlap the Gram passes instead of
-            # following them (guide §2.6; measured serial: 1.1 s Gram
-            # collect + 2.3 s grouped job back-to-back at sf0.1). The
-            # closures and the result-frame union order are identical to
-            # the serial form; only the scheduling changes.
-            def _gauss_job(wn, wvars):
-                w_args = (
-                    df,
-                    outcome,
-                    wvars,
-                    covariates,
-                    covar_types,
-                    data.category_levels,
-                    min_n,
-                    lambda rv: _default_row(rv, outcome),
-                    w_consts,
-                    _weight_col(wn) if wn is not None else None,
-                    weight_info["weight_means"][wn] if wn is not None else 1.0,
-                    wn,
-                )
-                if survey_design_spec.has_cluster:
-                    return weighted_gaussian_suffstats_rows(
-                        *w_args, STRAT_COL, CLUST_COL, SUBSET_COL,
-                        vcov_method=vcov_method,
-                    )
-                return weighted_gaussian_nocluster_rows(
-                    *w_args, STRAT_COL, SUBSET_COL
-                )
-
-            deferred_gauss_jobs = [
-                (lambda wn=wn, wvars=wvars: _gauss_job(wn, wvars))
-                for wn, wvars in by_weight.items()
-            ]
-            deferred_gauss_rows = list(no_weight_rows)
-            if deferred_gauss_jobs or deferred_gauss_rows:
-                deferred_gauss_slot = len(results)
-                results.append(None)  # filled after the pool resolves
-        if (
-            use_sufficient_stats
-            and survey_design_spec is not None
-            and family == BINOMIAL
-            and (
-                vcov_method == "stata"
-                or (vcov_method == "jackknife" and survey_design_spec.has_cluster)
-            )
-            and (
-                (
-                    survey_design_spec.has_cluster
-                    and len(survey_design_spec.constants()["clusters"]) <= 16384
-                )
-                or (
-                    not survey_design_spec.has_cluster
-                    and len(survey_design_spec.constants()["rows_per_strat"]) <= 16384
-                )
-            )
-            and all(covar_types[c] in (BINARY, CATEGORICAL) for c in covariates)
-        ):
-            # survey-weighted binomial fits collapse to weighted
-            # contingency cells keyed by (value, covariates, outcome,
-            # CLUSTER): frequency-weighted IRLS reproduces the kernel's
-            # iterates exactly and per-cluster score sums feed the same
-            # sandwich algebra (functions/wbinomagg.py) — one codegen
-            # count/sum aggregation instead of melting data rows through
-            # per-variable Python groups. Discrete-domain variables only
-            # (binary/categorical, or genotype-encoded continuous);
-            # everything else stays on the grouped kernel below.
-            from clarite_python_spark.functions.wbinomagg import (
-                weighted_binomial_cells_rows,
-            )
-            from clarite_python_spark.survey.design import (
-                CLUST_COL,
-                STRAT_COL,
-                SUBSET_COL,
-                _weight_col,
-            )
-
-            wsuff = [
-                v
-                for v in group
-                if rv_types[v] in (BINARY, CATEGORICAL)
-                or (rv_types[v] == CONTINUOUS and v in genotype_cols)
-            ]
-            group = [v for v in group if v not in set(wsuff)]
-            by_weight = {}
-            no_weight_rows = []
-            for v in wsuff:
-                if weight_info["single_weight"]:
-                    by_weight.setdefault(weight_info["weight_name"], []).append(v)
-                elif weight_info["weight_names"] is not None:
-                    wn = weight_info["weight_names"].get(v)
-                    if wn is None:
-                        no_weight_rows.append(_default_row(v, outcome))
-                    else:
-                        by_weight.setdefault(wn, []).append(v)
-                else:
-                    by_weight.setdefault(None, []).append(v)
-            w_consts = dict(
-                survey_design_spec.constants(),
-                drop_unweighted=weight_info["drop_unweighted"],
-            )
-            w_rows = list(no_weight_rows)
-            for wn, wvars in by_weight.items():
-                r_rows, fb = weighted_binomial_cells_rows(
-                    df,
-                    outcome,
-                    wvars,
-                    rv_types,
-                    covariates,
-                    covar_types,
-                    min_n,
-                    report_categorical_betas,
-                    lambda rv: _default_row(rv, outcome),
-                    w_consts,
-                    _weight_col(wn) if wn is not None else None,
-                    weight_info["weight_means"][wn] if wn is not None else 1.0,
-                    wn,
-                    CLUST_COL,
-                    SUBSET_COL,
-                    strat_col=STRAT_COL,
-                    vcov_method=vcov_method,
-                )
-                w_rows.extend(r_rows)
-                group.extend(fb)  # cell blowup -> grouped kernel
-            if w_rows:
-                results.append(
-                    data.df.sparkSession.createDataFrame(w_rows, RESULT_SCHEMA)
-                )
-        n_wirls_cand = sum(1 for v in group if rv_types[v] == CONTINUOUS)
-        if (
-            use_sufficient_stats
-            and survey_design_spec is not None
-            and family == BINOMIAL
-            and (
-                vcov_method == "stata"
-                # jackknife = replicate IRLS fits batched through the
-                # same scans (cluster designs only), gated on the
-                # (#variables x #clusters) unit budget — see
-                # JK_IRLS_MAX_UNITS; past it the grouped kernel's
-                # one-scan in-pandas replicates win
-                or (
-                    vcov_method == "jackknife"
-                    and survey_design_spec.has_cluster
-                    and n_wirls_cand
-                    * len(survey_design_spec.constants()["clusters"])
-                    <= JK_IRLS_MAX_UNITS
-                )
-            )
-            and (
-                (
-                    survey_design_spec.has_cluster
-                    and len(survey_design_spec.constants()["clusters"]) <= 16384
-                )
-                or (
-                    not survey_design_spec.has_cluster
-                    and len(survey_design_spec.constants()["rows_per_strat"]) <= 16384
-                )
-            )
-            and all(covar_types[c] in (BINARY, CATEGORICAL) for c in covariates)
-        ):
-            # CONTINUOUS variables in a weighted logistic study (incl.
-            # wide-domain cell fallbacks routed just above): distributed
-            # IRLS — one shuffle-free scan per iteration batched over all
-            # unconverged variables, then per-cluster score sums for the
-            # linearized sandwich (functions/wbinomirls.py). This closes
-            # the last weighted scale cliff: these fits previously melted
-            # rows x variables through the grouped kernel.
-            from clarite_python_spark.functions.wbinomirls import (
-                weighted_binomial_irls_rows,
-            )
-            from clarite_python_spark.survey.design import (
-                CLUST_COL,
-                STRAT_COL,
-                SUBSET_COL,
-                _weight_col,
-            )
-
-            wirls = [v for v in group if rv_types[v] == CONTINUOUS]
-            group = [v for v in group if v not in set(wirls)]
-            data.prefetch_category_levels(
-                [c for c in covariates if covar_types[c] in (BINARY, CATEGORICAL)]
-            )
-            by_weight = {}
-            no_weight_rows = []
-            for v in wirls:
-                if weight_info["single_weight"]:
-                    by_weight.setdefault(weight_info["weight_name"], []).append(v)
-                elif weight_info["weight_names"] is not None:
-                    wn = weight_info["weight_names"].get(v)
-                    if wn is None:
-                        no_weight_rows.append(_default_row(v, outcome))
-                    else:
-                        by_weight.setdefault(wn, []).append(v)
-                else:
-                    by_weight.setdefault(None, []).append(v)
-            w_consts = dict(
-                survey_design_spec.constants(),
-                drop_unweighted=weight_info["drop_unweighted"],
-            )
-            w_rows = list(no_weight_rows)
-            for wn, wvars in by_weight.items():
-                w_rows.extend(
-                    weighted_binomial_irls_rows(
-                        df,
-                        outcome,
-                        wvars,
-                        covariates,
-                        covar_types,
-                        data.category_levels,
-                        min_n,
-                        lambda rv: _default_row(rv, outcome),
-                        w_consts,
-                        _weight_col(wn) if wn is not None else None,
-                        weight_info["weight_means"][wn] if wn is not None else 1.0,
-                        wn,
-                        STRAT_COL,
-                        CLUST_COL,
-                        SUBSET_COL,
-                        vcov_method=vcov_method,
-                    )
-                )
-            if w_rows:
-                results.append(
-                    data.df.sparkSession.createDataFrame(w_rows, RESULT_SCHEMA)
-                )
-        if (
-            use_sufficient_stats
-            and survey_design_spec is None
-            and custom_kernel_factory is None
-            and family == GAUSSIAN
-        ):
-            # Every Gaussian fit is closed-form OLS: ONE batched
-            # masked-sum pass covers continuous variables (Wald t),
-            # binary variables (Wald on the treatment dummy) and
-            # categorical variables (LRT vs the restricted sub-block of
-            # the same Gram) — no melt, no shuffle of data rows, no
-            # Python groups (functions/olsagg.py; ~20x the kernel at the
-            # reference's canonical 22.6k x 970 shape). Variables whose
-            # complete-case level set differs from the catalog's fall
-            # back to the grouped kernel below.
-            from clarite_python_spark.functions.olsagg import gaussian_assoc_rows
-
-            cont = [v for v in group if rv_types[v] == CONTINUOUS]
-            enc = [v for v in group if rv_types[v] in (BINARY, CATEGORICAL)]
-            data.prefetch_category_levels(
-                [c for c in covariates if covar_types[c] in (BINARY, CATEGORICAL)]
-                + enc
-            )
-            assoc_rows, group = gaussian_assoc_rows(
-                df,
-                outcome,
-                cont,
-                enc,
-                rv_types,
-                covariates,
-                covar_types,
-                data.category_levels,
-                min_n,
-                report_categorical_betas,
-                lambda rv: _default_row(rv, outcome),
-            )
-            if assoc_rows:
-                results.append(
-                    data.df.sparkSession.createDataFrame(assoc_rows, RESULT_SCHEMA)
-                )
-        if (
-            use_sufficient_stats
-            and survey_design_spec is None
-            and custom_kernel_factory is None
-            and family == BINOMIAL
-        ):
-            # Binomial fits collapse to contingency cells when the
-            # variable and all covariates have small value domains (GWAS
-            # genotypes: 3 values) — ONE count aggregation replaces the
-            # per-variable melt+shuffle, then frequency-weighted IRLS
-            # (identical iterates to the row-level kernel) runs
-            # driver-side per variable (functions/binomagg.py). Variables
-            # with wide domains or continuous covariates fall back to the
-            # grouped kernel below.
-            from clarite_python_spark.functions.binomagg import (
-                binomial_contingency_rows,
-            )
-
-            b_rows, group = binomial_contingency_rows(
-                df,
-                outcome,
-                group,
-                rv_types,
-                covariates,
-                covar_types,
-                min_n,
-                report_categorical_betas,
-                lambda rv: _default_row(rv, outcome),
-                known_small=genotype_cols,
-            )
-            if b_rows:
-                results.append(
-                    data.df.sparkSession.createDataFrame(b_rows, RESULT_SCHEMA)
-                )
-        grouped_res = None
-        if group:
-            long = df.select(
-                *id_vars, *[qcol(c).cast("string").alias(c) for c in group]
-            ).unpivot(id_vars, group, "variable", "value")
-            grouped_res = long.groupBy("variable").applyInPandas(
-                kernel, RESULT_SCHEMA
-            )
-        if deferred_gauss_slot is not None:
-            # resolve the deferred suffstats passes, overlapping them
-            # with the grouped tail's job (guide §2.6): family jobs are
-            # submitted first so FIFO scheduling gives them priority and
-            # the grouped job back-fills; the grouped rows come back as
-            # a local frame with identical values. Prefetch the shared
-            # level cache so concurrent closures don't race it.
-            from concurrent.futures import ThreadPoolExecutor
-
-            data.prefetch_category_levels(
-                [c for c in covariates if covar_types[c] in (BINARY, CATEGORICAL)]
-            )
-            spark_sess = data.df.sparkSession
-            n_workers = len(deferred_gauss_jobs) + (1 if grouped_res is not None else 0)
-            with ThreadPoolExecutor(max_workers=max(1, min(4, n_workers))) as pool:
-                futs = [pool.submit(job) for job in deferred_gauss_jobs]
-                gfut = (
-                    pool.submit(grouped_res.collect)
-                    if grouped_res is not None
-                    else None
-                )
-                w_rows = list(deferred_gauss_rows)
-                for f in futs:
-                    w_rows.extend(f.result())
-                grouped_rows = gfut.result() if gfut is not None else None
-            if w_rows:
-                results[deferred_gauss_slot] = spark_sess.createDataFrame(
-                    w_rows, RESULT_SCHEMA
-                )
-            else:
-                results.pop(deferred_gauss_slot)
-            if grouped_rows is not None:
-                results.append(
-                    spark_sess.createDataFrame(grouped_rows, RESULT_SCHEMA)
-                )
-        elif grouped_res is not None:
-            results.append(grouped_res)
+            kernel = _make_assoc_kernel(*kernel_args)
+        fit = _Fit(
+            data=data,
+            df=df,
+            outcome=outcome,
+            family=family,
+            rv_types=rv_types,
+            covariates=covariates,
+            covar_types=covar_types,
+            genotype_cols=genotype_cols,
+            min_n=min_n,
+            report_categorical_betas=report_categorical_betas,
+            kernel=kernel,
+            id_vars=id_vars,
+            spec=spec,
+            vcov_method=vcov_method,
+            max_concurrent_jobs=max_concurrent_jobs,
+        )
+        results += _run_plan(fit, plan, replan)
 
     out = results[0]
     for r in results[1:]:
@@ -1418,45 +1388,26 @@ def interaction_study(
 
     results = []
     for outcome in outcomes:
-        outcome_type = cat.get(outcome)
-        df = _ensure_parallelism(data.df)
-        if outcome_type == CONTINUOUS:
-            family = GAUSSIAN
-            df = df.withColumn(outcome, F.col(outcome).cast("double"))
-        elif outcome_type == BINARY:
-            family = BINOMIAL
-            mapping = _encode_binary_outcome(data.category_levels(outcome))
-            expr = F.when(F.col(outcome).isNull(), F.lit(None).cast("double"))
-            for k, v in mapping.items():
-                expr = expr.when(F.col(outcome).cast("string") == F.lit(str(k)), F.lit(v))
-            df = df.withColumn(outcome, expr)
-        else:
-            raise ValueError(f"outcome {outcome!r} must be continuous or binary")
-
+        df, family = _encode_outcome(data, _ensure_parallelism(data.df), outcome)
         my_pairs = list(pairs)
         if use_sufficient_stats and family == GAUSSIAN:
             # continuous x continuous pairs are closed-form OLS: full +
             # restricted + LRT from one sufficient-stats pass (the scale
             # path for pairwise epistasis; functions/olsagg.py)
-            from clarite_python_spark.functions.olsagg import gaussian_interaction_rows
-
             suff_pairs = [
                 (a, b)
                 for a, b in my_pairs
                 if var_types[a] == CONTINUOUS and var_types[b] == CONTINUOUS
             ]
-            my_pairs = [p for p in my_pairs if p not in set(suff_pairs)]
+            suff = set(suff_pairs)
+            my_pairs = [p for p in my_pairs if p not in suff]
 
             # the chunk aggs are independent jobs over one shared input
             # whose per-job cost is dominated by fixed overhead (plan
-            # analysis of ~batch x 20 Gram expressions + job latency) —
-            # submit them from a driver thread pool (guide §2.6) instead
-            # of serially; pool.map preserves chunk order so the result
-            # union is identical. Single-chunk studies (the common
-            # p <= pair_batch_size case, incl. the bench query) take the
-            # same one-job path as before.
+            # analysis of ~batch x 20 Gram expressions + job latency), so
+            # they run concurrently; results keep chunk order
             def _suff_chunk(start: int) -> list[dict]:
-                return gaussian_interaction_rows(
+                return olsagg.gaussian_interaction_rows(
                     df,
                     outcome,
                     suff_pairs[start : start + pair_batch_size],
@@ -1468,17 +1419,11 @@ def interaction_study(
                     lambda a, b: _interaction_default(a, b, outcome),
                 )
 
-            starts = list(range(0, len(suff_pairs), pair_batch_size))
-            if len(starts) > 1:
-                from concurrent.futures import ThreadPoolExecutor
-
-                data.prefetch_category_levels(
-                    [c for c in covariates if covar_types[c] in (BINARY, CATEGORICAL)]
-                )
-                with ThreadPoolExecutor(max_workers=min(4, len(starts))) as pool:
-                    chunk_rows = list(pool.map(_suff_chunk, starts))
-            else:
-                chunk_rows = [_suff_chunk(s) for s in starts]
+            chunk_rows = _run_concurrently(
+                data,
+                [partial(_suff_chunk, s) for s in range(0, len(suff_pairs), pair_batch_size)],
+                [c for c in covariates if covar_types[c] in (BINARY, CATEGORICAL)],
+            )
             for suff_rows in chunk_rows:
                 results.append(
                     data.df.sparkSession.createDataFrame(suff_rows, INTERACTION_SCHEMA)

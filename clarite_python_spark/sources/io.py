@@ -252,16 +252,6 @@ def load_testdata(spark: SparkSession, sf_dir: str, tables: list[str] | None = N
     return out
 
 
-def check_unique_ids(df: DataFrame, col: str = ID_COL) -> int:
-    """Count duplicate-ID rows (0 means the invariant holds).
-
-    Distributed anti-check: groupBy(ID).count > 1 (no driver collect of
-    data, only the scalar)."""
-    return (
-        df.groupBy(col).agg(F.count(F.lit(1)).alias("n")).where(F.col("n") > 1).limit(1).count()
-    )
-
-
 def from_jsonl(
     spark: SparkSession,
     path: str,

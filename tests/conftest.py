@@ -36,6 +36,9 @@ def spark():
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )
+    # spark.driver.memory only takes effect when this fixture starts the
+    # JVM; a session started earlier would leave it silently unset
+    assert s.sparkContext.getConf().get("spark.driver.memory") == "6g"
     yield s
     s.stop()
 

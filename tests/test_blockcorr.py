@@ -45,6 +45,12 @@ def test_blockcorr_matches_pandas_pairwise_with_nans(spark):
         assert got[k] == pytest.approx(r, rel=1e-9), k
 
 
+def test_blockcorr_rejects_duplicate_columns(spark):
+    df = spark.createDataFrame(pd.DataFrame({"a": [1.0, 2.0], "b": [2.0, 1.0]}))
+    with pytest.raises(ValueError, match=r"duplicate column names in cols: \['a'\]"):
+        block_correlations(df, ["a", "b", "a"])
+
+
 def test_blockcorr_wide_5000_columns_matches_mlstat_subset(spark):
     """The VERDICT round-5 'done' bar: a 5,000-column synthetic runs
     through the block path and agrees with pyspark.ml.stat on an

@@ -34,6 +34,11 @@ def test_full_probe_equals_brute(emb, queries):
     assert ivf == brute
 
 
+def test_wrong_dim_raises(emb, queries):
+    with pytest.raises(ValueError, match="dim=3"):
+        ivf_topk(emb, queries, k=10, n_lists=8, n_probe=8, dim=3)
+
+
 def test_partial_probe_recall(emb, queries):
     brute = _hits(cosine_topk(emb, queries, k=10))
     ivf = _hits(ivf_topk(emb, queries, k=10, n_lists=8, n_probe=4))
